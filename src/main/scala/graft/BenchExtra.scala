@@ -57,9 +57,9 @@ object BenchExtra {
           if (mode == "pipeline-sf") Transcripts.fromEvents(spark, sfDir)
           else TranscriptGen.synthetic(spark, nConvs = 390000L, turnsPerConv = 5,
             hotConvs = 5, hotFactor = 10000)
-        // Pipeline.run itself performs the eager conv cache fill, so its
-        // construction is a recorded part — totals stay comparable with
-        // Bench's timed(forceAll(Pipeline.run(...)))
+        // construction is a recorded part (it runs no job; the caches fill
+        // in the counts below) — totals stay comparable with Bench's
+        // timed(forceAll(Pipeline.run(...)))
         val out = record("run.construct")(Pipeline.run(spark, turns, PipelineConfig.default))
         record("enriched.count")(out.enriched.count())
         record("routing.count")(out.routing.count())
@@ -71,36 +71,6 @@ object BenchExtra {
         record("redRollup.count")(out.redRollup.count())
         record("latencyHistogram.count")(out.latencyHistogram.count())
         record("unpersistAll")(out.unpersistAll())
-      case "both-clear" =>
-        val (sfT, sfSec) = timed(Bench.forceAll(
-          Pipeline.run(spark, Transcripts.fromEvents(spark, sfDir), PipelineConfig.default)))
-        results("pipeline_sf") = sfSec
-        CacheBook.release()
-        spark.catalog.clearCache()
-        System.gc()
-        val gen = TranscriptGen.synthetic(spark, nConvs = 390000L, turnsPerConv = 5,
-          hotConvs = 5, hotFactor = 10000)
-        val (genT, genSec) = timed(Bench.forceAll(Pipeline.run(spark, gen, PipelineConfig.default)))
-        results("pipeline_gen") = genSec
-        println(s"turns sf=$sfT gen=$genT")
-      case "gen2" =>
-        val gen = TranscriptGen.synthetic(spark, nConvs = 390000L, turnsPerConv = 5,
-          hotConvs = 5, hotFactor = 10000)
-        val (t1, s1) = timed(Bench.forceAll(Pipeline.run(spark, gen, PipelineConfig.default)))
-        results("pipeline_gen_1") = s1
-        val (t2, s2) = timed(Bench.forceAll(Pipeline.run(spark, gen, PipelineConfig.default)))
-        results("pipeline_gen_2") = s2
-        println(s"turns $t1 $t2")
-      case "both" =>
-        // mimic the bench tail: pipeline_sf then pipeline_gen in one JVM
-        val (sfT, sfSec) = timed(Bench.forceAll(
-          Pipeline.run(spark, Transcripts.fromEvents(spark, sfDir), PipelineConfig.default)))
-        results("pipeline_sf") = sfSec
-        val gen = TranscriptGen.synthetic(spark, nConvs = 390000L, turnsPerConv = 5,
-          hotConvs = 5, hotFactor = 10000)
-        val (genT, genSec) = timed(Bench.forceAll(Pipeline.run(spark, gen, PipelineConfig.default)))
-        results("pipeline_gen") = genSec
-        println(s"turns sf=$sfT gen=$genT")
       case "rollup" =>
         // cardinality probe: how big is the shared fine rollup vs its
         // derived tables at generator scale (sizing evidence for the

@@ -14,7 +14,10 @@ import graft.operators.{Aggregates, Enrich, Route}
   * One logical plan per output; the enriched intermediate is shared,
   * pruned to the columns routing + aggregates read, and cached (on a
   * cluster: checkpointed to a staging table so the fan-out writes are
-  * exactly-once and resumable).
+  * exactly-once and resumable). The three shared relations (enriched,
+  * routing, raw rollup) go through [[CacheBook]]: building the outputs
+  * runs no job, the first sink write fills them, and one
+  * `CacheBook.release()` (or [[PipelineOutputs.unpersistAll]]) drops them.
   *
   * Observability: the enriched scan carries an [[Observation]] with
   * per-stage row/error/slow counters (the reference's prometheus counters
@@ -54,11 +57,10 @@ object Pipeline {
       spark: SparkSession,
       turns: DataFrame,
       cfg: PipelineConfig = PipelineConfig.default,
-      cache: Boolean = true,
       dims: graft.sources.Dims.DimTables = graft.sources.Dims.default
   ): PipelineOutputs = {
     val obs = Observation()
-    val enriched0 = Enrich.enriched(turns, spark, cfg, dims)
+    val enriched = CacheBook.cached(Enrich.enriched(turns, spark, cfg, dims)
       // prune to the columns routing + aggregates read before caching:
       // the wide payload (text, url, ...) is re-read from the source only
       // by the final sink join, keeping the cached/shuffled rows narrow
@@ -73,16 +75,13 @@ object Pipeline {
         sum(when(col("is_error"), 1L).otherwise(0L)).as("error_spans"),
         sum(when(col("is_slow_span"), 1L).otherwise(0L)).as("slow_spans"),
         approx_count_distinct(col("conv_id")).as("approx_convs")
-      )
-    val enriched = if (cache) enriched0.cache() else enriched0
-    val routing0 = Route.convRouting(enriched, cfg, eagerCache = cache)
-    val routing = if (cache) routing0.cache() else routing0
+      ))
+    val routing = CacheBook.cached(Route.convRouting(enriched, cfg))
     // ONE pass over the spans feeds every metric table (rollup tree).
     // The UNCAPPED raw rollup is the cached node: the cardinality-cap dim
     // and every derived table then read the tiny aggregate from cache, so
     // the span relation is aggregated exactly once per run.
-    val rawRollup0 = Aggregates.fineRollupRaw(enriched, cfg)
-    val rawRollup = if (cache) rawRollup0.cache() else rawRollup0
+    val rawRollup = CacheBook.cached(Aggregates.fineRollupRaw(enriched, cfg))
     val rollup = Aggregates.capRollup(rawRollup, cfg)
     // sample_traces = false: the sampler is bypassed — every turn
     // forwards with sink "forward" and the trace/sampled counters stay
@@ -160,7 +159,6 @@ object Pipeline {
       outDir: String,
       resume: Boolean = false,
       lineage: Boolean = true,
-      parallelWrites: Boolean = true,
       writeMetrics: Boolean = true
   ): Map[String, Long] = {
     Files.createDirectories(Paths.get(outDir))
@@ -271,7 +269,7 @@ object Pipeline {
     )
     val (sinkCounts, metricsCounts) =
       if (!writeMetrics) (writeSinksTarget(), Map.empty[String, Long])
-      else if (parallelWrites) {
+      else {
         val sinksF = Future(writeSinksTarget())
         val metricsF = Future(writeMetricsTarget())
         // await BOTH before rethrowing either failure: a detached write
@@ -281,9 +279,6 @@ object Pipeline {
         val metricsR = scala.util.Try(Await.result(metricsF, Duration.Inf))
         val m = metricsR.get
         (sinksR.get, m)
-      } else {
-        val s = writeSinksTarget()
-        (s, writeMetricsTarget())
       }
 
     // uniform return shape across flag combinations: "metrics" is always

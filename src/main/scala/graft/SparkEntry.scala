@@ -57,10 +57,7 @@ object SparkEntry {
     Enrich.enriched(transcripts(spark, dir), spark, cfg)
 
   private def routing(spark: SparkSession, dir: String): DataFrame =
-    // eagerCache: these query entries execute the routing relation, so
-    // fill the shared conv cache once before its two consumer branches
-    // are scheduled (see Route.convRouting)
-    Route.convRouting(enriched(spark, dir), cfg, eagerCache = true)
+    Route.convRouting(enriched(spark, dir), cfg)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

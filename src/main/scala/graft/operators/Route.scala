@@ -175,25 +175,18 @@ object Route {
   def convRouting(
       enriched: DataFrame,
       cfg: PipelineConfig = PipelineConfig.default,
+      @deprecated("ignored: the conversation fold fills lazily on first action", "0.1.0")
       eagerCache: Boolean = false
   ): DataFrame = {
     // cache the tiny conv-level fold (one row per conversation): it feeds
     // the request-rank dim AND the join's left side — uncached, column
     // pruning specializes the two branches into two full span-level
     // aggregation DAGs with no reusable exchange (plan-audited: q04 ran
-    // the enrich+segment pipeline twice). Same multi-consumer pattern as
-    // Aggregates.fineRollup; registered in CacheBook so verify/bench/
-    // SqlSurface lifecycles release it. `eagerCache` forces the fill
-    // BEFORE the consumer stages are scheduled — without it, AQE
-    // materializes the rank-dim stage and the join's left stage
-    // concurrently and both compute the uncached partitions (the block
-    // manager deduplicates storage, not work). Query paths that execute
-    // the routing relation set it; plan-only registration (SqlSurface
-    // views) and consumers that prune the routing arms away (q17's
-    // constant-folded scrape) keep the lazy default so building the
-    // DataFrame stays free of actions.
+    // the enrich+segment pipeline twice). Same two-consumer shape as
+    // Aggregates.fineRollup, and the same rule (see CacheBook): the cache
+    // is lazy, so building the routing relation runs no job and the first
+    // action that reads it fills it.
     val conv = graft.CacheBook.cached(convDims(enriched))
-    if (eagerCache) conv.count()
 
     // Request-cardinality cap: rank distinct request contexts per entity by
     // first-seen (min main_ts, then request for determinism); requests

@@ -61,9 +61,10 @@ object StreamingPipeline {
           .getOrElse(graft.sources.Dims.default)
         val out = Pipeline.run(spark, batch, batchCfg, dims = batchDims)
         Pipeline.writeSinks(out, s"$outDir/batch_$batchId", writeMetrics = metricsPerBatch)
-        // per-batch plans die with the batch — drop the operator-internal
-        // caches they registered so a long-running stream's cache memory
-        // is bounded by one batch, not the stream's lifetime
+        // per-batch plans die with the batch — drop every cache the batch
+        // registered (the pipeline's and the operators', see CacheBook) so
+        // a long-running stream's cache memory is bounded by one batch,
+        // not the stream's lifetime
         graft.CacheBook.release()
       }
       .start()

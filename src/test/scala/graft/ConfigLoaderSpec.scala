@@ -61,9 +61,17 @@ class ConfigLoaderSpec extends SparkTestBase {
     assert(r.serviceKey == "default" && r.replacement == "client_errors")
   }
 
-  test("loads the reference's sample-collector-config.yaml verbatim (value_expr/$$n dialect)") {
-    val yaml = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/sample-collector-config.yaml"))
+  /** A RECONSTRUCTION of the reference's sample-collector-config.yaml,
+    * not the file itself: see the header of the resource for what it is
+    * rebuilt from. */
+  private def sampleCollectorConfig: String = {
+    val in = getClass.getResourceAsStream("/sample-collector-config.reconstructed.yaml")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  test("loads a reconstructed sample-collector-config.yaml (value_expr/$$n dialect)") {
+    val yaml = sampleCollectorConfig
     val jc = ConfigLoader.fromYaml(yaml)
     // reference mapstructure field names (config.go:18-37)
     assert(jc.pipeline.env == "dev" && jc.pipeline.site == "dev")
@@ -92,8 +100,7 @@ class ConfigLoaderSpec extends SparkTestBase {
     // mirrors span_enrichment_test.go:128-204: 4xx status -> client_errors,
     // 5xx -> server_errors, via the loaded (value_expr) rules
     import org.apache.spark.sql.functions._
-    val yaml = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/sample-collector-config.yaml"))
+    val yaml = sampleCollectorConfig
     val jc = ConfigLoader.fromYaml(yaml)
     val errCol = graft.functions.Rules.compileTarget(
       jc.rules("asserts.error.type"),

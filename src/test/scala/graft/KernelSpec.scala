@@ -59,4 +59,21 @@ class KernelSpec extends SparkTestBase {
     // released entries still compute correctly (recompute path)
     assert(c.count() == 100)
   }
+
+  test("CacheBook: a plan Spark already caches adds no entry; rebuilding a query keeps the size") {
+    CacheBook.release()
+    CacheBook.cached(spark.range(50).toDF("n"))
+    assert(CacheBook.size == 1)
+    // the same analyzed plan, built again: Spark already caches it
+    CacheBook.cached(spark.range(50).toDF("n"))
+    assert(CacheBook.size == 1)
+    // a query's operator caches are registered once, however often it is built
+    val q09 = SparkEntry.queries("q09_red")
+    q09(spark, smallSfDir)
+    val afterFirst = CacheBook.size
+    assert(afterFirst > 1, "q09 caches its fine rollup through the book")
+    q09(spark, smallSfDir)
+    assert(CacheBook.size == afterFirst)
+    CacheBook.release()
+  }
 }

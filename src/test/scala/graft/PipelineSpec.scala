@@ -13,7 +13,7 @@ class PipelineSpec extends SparkTestBase {
   test("sample_traces=false: pure passthrough, no trace counters, metrics still captured") {
     import org.apache.spark.sql.functions._
     val turns = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
-    val out = Pipeline.run(spark, turns, cfg.copy(sampleTraces = false), cache = false)
+    val out = Pipeline.run(spark, turns, cfg.copy(sampleTraces = false))
     assert(out.routedTurns.count() == turns.count()) // every turn forwards
     assert(out.routedTurns.select("sink").distinct().collect().map(_.getString(0)).toSeq == Seq("forward"))
     // ALL four counters increment inside the sampler (sampler.go:115,
@@ -35,14 +35,14 @@ class PipelineSpec extends SparkTestBase {
       ("c3", 5, "tool", "", "")
     ).toDF("conv_id", "turn_idx", "role", "text", "tool")
       .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-    val out = Pipeline.run(spark, degenerate, cfg, cache = false)
+    val out = Pipeline.run(spark, degenerate, cfg)
     // no crash anywhere in the DAG; every conversation still accounted for
     assert(out.routing.count() <= 3)
     out.routedTurns.count()
     out.spanCounts.count()
     out.latencyHistogram.count()
     // and an empty batch produces empty outputs, not an error
-    val empty = Pipeline.run(spark, degenerate.filter(lit(false)), cfg, cache = false)
+    val empty = Pipeline.run(spark, degenerate.filter(lit(false)), cfg)
     assert(empty.routing.count() == 0 && empty.routedTurns.count() == 0)
     assert(empty.latencyHistogram.count() == 0)
   }

@@ -22,6 +22,9 @@ trait SparkTestBase extends AnyFunSuite {
     s
   }
 
+  /** The smallest generated test scale (TESTDATA.md). */
+  val smallSfDir: String = "/root/testdata/sf0.001"
+
   def ts(secs: Double): java.sql.Timestamp =
     new java.sql.Timestamp((secs * 1000).toLong)
 

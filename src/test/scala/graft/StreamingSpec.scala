@@ -101,6 +101,25 @@ class StreamingSpec extends SparkTestBase {
     assert(slow.select("conv_id").collect().map(_.getString(0)).toSeq == Seq("c1"))
   }
 
+  test("foreachBatch pipeline: every micro-batch releases the caches it took") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_cache").toString
+    val input = MemoryStream[graft.model.Turn]
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val q = StreamingPipeline.start(spark, input.toDF(), dir, flushSeconds = 1)
+    val resident =
+      try (0 until 5).map { b =>
+        input.addData(
+          turn(s"s$b", 0, "user", "api-server", durMs = 700, tSecs = 10 + b), // slow
+          turn(s"e$b", 0, "user", "api-server", durMs = 100, status = 503, tSecs = 20 + b) // error
+        )
+        q.processAllAvailable()
+        spark.sparkContext.getPersistentRDDs.size
+      }
+      finally q.stop()
+    assert(resident == Seq.fill(5)(before))
+  }
+
   test("watermarked windowed RED rollup: windows finalize on watermark; late rows dropped") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[graft.model.Turn]
