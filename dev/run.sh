@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a compiled graft main class directly (no sbt lock, no sbt startup):
 #   dev/run.sh graft.Verify /root/testdata/sf0.01 /tmp/out
-#   SPARK_DRIVER_MEM=24g dev/run.sh graft.ScalingBench 1000000 5 2 2 8
+#   dev/run.sh graft.Probe q04_routing q09_red
 # Requires `sbt compile` to have produced target/scala-2.13/classes.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -20,6 +20,5 @@ if [ -z "$SCALA_JARS" ]; then
 fi
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" ${SPARK_GC_OPTS:-} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*${SCALA_JARS:+:$SCALA_JARS}" \
   "$MAIN" "$@"

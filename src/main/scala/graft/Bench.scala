@@ -31,21 +31,18 @@ object Bench {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** The generator-scaled pipeline input: 2.2M turns, 5 hot (skewed)
+    * conversations of 50k turns each. */
+  def genTable(spark: SparkSession): DataFrame =
+    TranscriptGen.synthetic(spark, nConvs = 390000L, turnsPerConv = 5,
+      hotConvs = 5, hotFactor = 10000)
+
   def runPipeline(spark: SparkSession, turns: DataFrame): (Long, Double) =
     timed(forceAll(Pipeline.run(spark, turns, PipelineConfig.default)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val telemetry = Telemetry.register(spark)
 
     // dev-iteration filter: SPARK_GRAFT_ONLY=q28_dup_clusters,q09_red
@@ -81,11 +78,8 @@ object Bench {
 
     // generator-scaled pipeline: 2M turns incl. hot (skewed) conversations
     val (genTurns, genSec) =
-      if (only.isEmpty) {
-        val gen = TranscriptGen.synthetic(spark, nConvs = 390000L, turnsPerConv = 5,
-          hotConvs = 5, hotFactor = 10000)
-        runPipeline(spark, gen)
-      } else (1L, 1.0)
+      if (only.isEmpty) runPipeline(spark, genTable(spark))
+      else (1L, 1.0)
     if (only.isEmpty) results("pipeline_gen") = genSec
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")

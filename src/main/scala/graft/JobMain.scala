@@ -77,17 +77,7 @@ object JobMain {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args.toList, Map.empty)
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-job")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(opts.get("--cores").fold(LocalSpark.envCores)(_.toInt))
     println(run(args, spark))
     spark.stop()
   }

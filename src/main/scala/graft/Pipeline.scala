@@ -119,13 +119,7 @@ object Pipeline {
     )
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  import Verify.jstr
 
   /** Written data files of a sink, from filesystem METADATA only (name +
     * byte size) — the per-file half of the lineage record. Zero data
@@ -158,7 +152,6 @@ object Pipeline {
       out: PipelineOutputs,
       outDir: String,
       resume: Boolean = false,
-      lineage: Boolean = true,
       writeMetrics: Boolean = true
   ): Map[String, Long] = {
     Files.createDirectories(Paths.get(outDir))
@@ -194,37 +187,29 @@ object Pipeline {
       done.getOrElse(name, {
         wroteAny.set(true)
         val path = s"$outDir/$name"
-        if (!lineage) {
-          // pure write: no counters observed, no manifest (matches the
-          // pre-observation "no manifest, no counts" contract and keeps
-          // the benchmark pipeline path free of per-row counter work)
-          write(df, path)
-          Map.empty[String, Long]
-        } else {
-          val obs = Observation()
-          val obsExprs = count(lit(1)).as("rows") +: counters.map { case (n, c) => c.as(n) }
-          val observed = df.observe(obs, obsExprs.head, obsExprs.tail: _*)
-          write(observed, path)
-          val metrics = obs.getAsJava
-          val counts = scala.jdk.CollectionConverters.MapHasAsScala(metrics).asScala.toMap
-            .map { case (k, v) => k -> v.asInstanceOf[Number].longValue() }
-          val files = listDataFiles(spark, path)
-          val filesJson = files
-            .map { case (f, b) => s"{${jstr("file")}: ${jstr(f)}, ${jstr("bytes")}: $b}" }
-            .mkString("[", ",", "]")
-          val countsJson = counts.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ",", "}")
-          val line =
-            s"""{"sink": ${jstr(name)}, "rows": ${counts("rows")}, "n_files": ${files.size}, "counts": $countsJson, "files": $filesJson}"""
-          manifestLock.synchronized {
-            Files.writeString(
-              manifest,
-              line + "\n",
-              StandardOpenOption.CREATE, StandardOpenOption.APPEND
-            )
-          }
-          counts
+        val obs = Observation()
+        val obsExprs = count(lit(1)).as("rows") +: counters.map { case (n, c) => c.as(n) }
+        val observed = df.observe(obs, obsExprs.head, obsExprs.tail: _*)
+        write(observed, path)
+        val metrics = obs.getAsJava
+        val counts = scala.jdk.CollectionConverters.MapHasAsScala(metrics).asScala.toMap
+          .map { case (k, v) => k -> v.asInstanceOf[Number].longValue() }
+        val files = listDataFiles(spark, path)
+        val filesJson = files
+          .map { case (f, b) => s"{${jstr("file")}: ${jstr(f)}, ${jstr("bytes")}: $b}" }
+          .mkString("[", ",", "]")
+        val countsJson = counts.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ",", "}")
+        val line =
+          s"""{"sink": ${jstr(name)}, "rows": ${counts("rows")}, "n_files": ${files.size}, "counts": $countsJson, "files": $filesJson}"""
+        manifestLock.synchronized {
+          Files.writeString(
+            manifest,
+            line + "\n",
+            StandardOpenOption.CREATE, StandardOpenOption.APPEND
+          )
         }
+        counts
       })
 
     // The two sink families are INDEPENDENT actions over the shared cached
@@ -281,9 +266,8 @@ object Pipeline {
         (sinksR.get, m)
       }
 
-    // uniform return shape across flag combinations: "metrics" is always
-    // present (0 when metrics were skipped or lineage was off), so callers
-    // may read counts("metrics") unconditionally
+    // uniform return shape: "metrics" is always present (0 when metrics
+    // were skipped), so callers may read counts("metrics") unconditionally
     val counts =
       Seq("errors", "slow", "normal").map(s => s"sink_$s" -> sinkCounts.getOrElse(s"sink_$s", 0L)) :+
         ("metrics" -> (if (writeMetrics) metricsCounts.getOrElse("rows", 0L) else 0L))

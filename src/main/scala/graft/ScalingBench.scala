@@ -3,38 +3,34 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.sources.TranscriptGen
 
-/** Two-parallelism scaling evidence for the north rule: run the identical
-  * full pipeline on the identical generated input at N and 4N parallelism
-  * and report throughput at both plus scaling efficiency =
-  * thr(4N) / (4 * thr(N)). No real cluster exists in this sandbox, so
-  * parallelism is task-level: ONE local[32] JVM, with the input generated
-  * in N partitions and `spark.sql.shuffle.partitions = N` per run — N
-  * concurrent tasks model N executors, and keeping a single JVM removes
-  * the between-JVM GC/JIT variance that dominates wall-clock on this VM
-  * (±50% observed between identical separate-JVM runs).
+/** One arm of the N-vs-4N scaling evidence (see dev/scaling.sh): the full
+  * pipeline job over a generated input in a `local[cores]` session whose
+  * whole JVM — worker threads AND GC — is pinned to `cores` CPUs with
+  * taskset. That models an N-core executor faithfully; in-JVM parallelism
+  * knobs alone let a low-parallelism run borrow the idle cores' memory
+  * bandwidth and GC threads and overstate its throughput. Cores come from
+  * [[LocalSpark.envCores]]; the sinks are written under the first
+  * `SPARK_LOCAL_DIRS` entry, next to Spark's shuffle files.
   *
-  * Usage: runMain graft.ScalingBench [nConvs] [turnsPerConv] [repeats] [nLow] [nHigh]
+  * Usage: dev/run.sh graft.ScalingBench <nConvs> <turnsPerConv> <repeats>
   */
 object ScalingBench {
 
-  /** One full job at the given parallelism. Returns the turn count plus a
-    * cleanup thunk (unpersist + output delete) so callers keep teardown
-    * OUT of the timed window — deleting the previous run's output is not
-    * part of the job a cluster would be graded on. */
+  /** One full job. Returns the turn count plus a cleanup thunk (unpersist
+    * + output delete) so callers keep teardown OUT of the timed window —
+    * deleting the previous run's output is not part of the job a cluster
+    * would be measured on. */
   def jobAt(
       spark: SparkSession,
-      parallelism: Int,
       nConvs: Long,
       turnsPerConv: Int,
       localDir: String
   ): (Long, () => Unit) = {
-    spark.conf.set("spark.sql.shuffle.partitions", parallelism)
-    val gen = TranscriptGen.synthetic(spark, nConvs, turnsPerConv,
-      hotConvs = 5, hotFactor = 1000, partitions = Some(parallelism))
+    val gen = TranscriptGen.synthetic(spark, nConvs, turnsPerConv, hotConvs = 5, hotFactor = 1000)
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(localDir), "graft_scale").toString
     val out = Pipeline.run(spark, gen)
-    Pipeline.writeSinks(out, dir, lineage = false)
+    Pipeline.writeSinks(out, dir)
     // turn count from the observation riding the enriched scan — no
     // extra count action
     val turns = out.observation.get("turns_enriched").asInstanceOf[Long]
@@ -44,98 +40,24 @@ object ScalingBench {
     })
   }
 
-  private def timedJob(
-      spark: SparkSession,
-      parallelism: Int,
-      nConvs: Long,
-      turnsPerConv: Int,
-      localDir: String
-  ): (Long, Double) = {
-    val ((turns, cleanup), sec) =
-      Bench.timed(jobAt(spark, parallelism, nConvs, turnsPerConv, localDir))
-    cleanup()
-    (turns, sec)
-  }
-
-  /** Single-arm mode for CPU-pinned runs (see dev/scaling.sh): the whole
-    * JVM — worker threads AND GC — is restricted to `cores` CPUs via
-    * taskset, which models an N-core executor faithfully: in-JVM
-    * parallelism knobs alone let a low-parallelism run borrow the idle
-    * cores' memory bandwidth and GC threads and overstate its throughput.
-    */
-  def runArm(cores: Int, nConvs: Long, turnsPerConv: Int, repeats: Int): Unit = {
-    val localDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_LOCAL_TMP", "/dev/shm/graft-spark-local"))
-    ).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit = {
+    val Array(nConvs, turnsPerConv, repeats) = args
+    val cores = LocalSpark.envCores
+    val spark = LocalSpark.session(cores)
+    // Spark created its local dirs at session start
+    val localDir = sys.env.get("SPARK_LOCAL_DIRS")
+      .fold(System.getProperty("java.io.tmpdir"))(_.split(',').head)
+    def job() = jobAt(spark, nConvs.toLong, turnsPerConv.toInt, localDir)
     try {
-      val (_, warmCleanup) = jobAt(spark, cores, nConvs, turnsPerConv, localDir) // warm-up
-      warmCleanup()
-      val runs = (1 to repeats).map(_ => timedJob(spark, cores, nConvs, turnsPerConv, localDir))
+      job()._2.apply() // warm-up
+      val runs = (1 to repeats.toInt).map { _ =>
+        val ((turns, cleanup), sec) = Bench.timed(job())
+        cleanup()
+        (turns, sec)
+      }
       val turns = runs.head._1
       val sec = runs.map(_._2).min
       println(f"""{"arm":$cores,"turns":$turns,"sec":$sec%.2f,"turns_per_sec":${(turns / sec).toLong}}""")
-    } finally spark.stop()
-  }
-
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("arm")) {
-      runArm(args(1).toInt, args(2).toLong, args(3).toInt, args(4).toInt)
-      return
-    }
-    val nConvs = if (args.length > 0) args(0).toLong else 390000L
-    val turnsPerConv = if (args.length > 1) args(1).toInt else 5
-    val repeats = if (args.length > 2) args(2).toInt else 3
-    val nLow = if (args.length > 3) args(3).toInt else 8
-    val nHigh = if (args.length > 4) args(4).toInt else nLow * 4
-    require(nHigh == nLow * 4, "scaling pairs must be N and 4N")
-
-    val localDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_LOCAL_TMP", "/dev/shm/graft-spark-local"))
-    ).toString
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scaling")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // shuffle/spill on tmpfs: local disk bandwidth is fixed per-box and
-      // would otherwise be the Amdahl term in a threads-scaling measurement
-      // (a real cluster scales local disks with executors)
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    try {
-      // warm-up at each parallelism (JIT, codegen, shuffle services)
-      jobAt(spark, nHigh, nConvs, turnsPerConv, localDir)._2.apply()
-      jobAt(spark, nLow, nConvs, turnsPerConv, localDir)._2.apply()
-      // interleave repeats so drift hits both arms equally; keep the min
-      val times = (1 to repeats).flatMap { _ =>
-        val (tLow, sLow) = timedJob(spark, nLow, nConvs, turnsPerConv, localDir)
-        val (tHigh, sHigh) = timedJob(spark, nHigh, nConvs, turnsPerConv, localDir)
-        require(tLow == tHigh, "same input must yield same turn count")
-        Seq(("low", tLow, sLow), ("high", tHigh, sHigh))
-      }
-      val turns = times.head._2
-      val secLow = times.collect { case ("low", _, s) => s }.min
-      val secHigh = times.collect { case ("high", _, s) => s }.min
-      val thrLow = turns / secLow
-      val thrHigh = turns / secHigh
-      val eff = thrHigh / (4.0 * thrLow)
-      println(
-        f"""{"metric":"scaling_efficiency","value":$eff%.3f,"unit":"ratio","turns":$turns,"n_low":$nLow,"n_high":$nHigh,"sec_n_low":$secLow%.2f,"sec_n_high":$secHigh%.2f,"turns_per_sec_n_low":${thrLow.toLong},"turns_per_sec_n_high":${thrHigh.toLong}}"""
-      )
     } finally spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Bucketed-table plumbing for co-located joins: writing both sides of a
   * recurring equi-join bucketed (and sorted) by the join key lets Spark
@@ -16,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sandbox the Spark-native bucketed parquet table (Hive-metastore-free
   * in-memory catalog) demonstrates the identical plan shape.
   */
-object Bucketing {
+object Bucketing extends AdaptiveSparkPlanHelper {
 
   /** Write `df` as a managed bucketed table, bucketed AND sorted by
     * `cols` into `numBuckets` buckets. */
@@ -32,8 +34,7 @@ object Bucketing {
     * the property bucketed joins eliminate. */
   def hasShuffle(df: DataFrame): Boolean = {
     df.collect()
-    df.queryExecution.executedPlan.toString.linesIterator
-      .exists(l => l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
+    find(df.queryExecution.executedPlan)(_.isInstanceOf[ShuffleExchangeExec]).isDefined
   }
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)

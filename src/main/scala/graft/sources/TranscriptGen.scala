@@ -22,10 +22,9 @@ object TranscriptGen {
       nConvs: Long,
       turnsPerConv: Int,
       hotConvs: Int = 0,
-      hotFactor: Int = 100,
-      partitions: Option[Int] = None
+      hotFactor: Int = 100
   ): DataFrame = {
-    val nPart = partitions.getOrElse(spark.sparkContext.defaultParallelism)
+    val nPart = spark.sparkContext.defaultParallelism
     val base = spark
       .range(0L, nConvs * turnsPerConv, 1L, nPart)
       .select(

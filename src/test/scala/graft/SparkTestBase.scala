@@ -5,22 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Turn
 
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The suites' one shared session: fixed at 4 cores so results and
+    * plans do not depend on the machine. */
+  val cores = 4
+  lazy val spark: SparkSession = LocalSpark.session(cores)
 }
 
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkTestBase.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkTestBase.spark
 
   /** The smallest generated test scale (TESTDATA.md). */
   val smallSfDir: String = "/root/testdata/sf0.001"

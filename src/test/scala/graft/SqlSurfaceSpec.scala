@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.apache.spark.sql.functions._
 
 /** The SQL surface: operators compose from `spark.sql` over the
   * registered `graft_*` views and native SQL functions, returning the
   * same results as the Scala API. */
-class SqlSurfaceSpec extends SparkTestBase {
+class SqlSurfaceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -119,5 +121,15 @@ class SqlSurfaceSpec extends SparkTestBase {
     val keptApi = graft.operators.Corpus.corpusFilter(docs)
       .filter(col("kept")).count()
     assert(keptSql == keptApi && keptSql > 0)
+  }
+
+  test("top-k table functions run their rank filter as a WindowGroupLimit over the unthresholded views") {
+    SqlSurface.registerDocOps(spark, sfDir)
+    Seq("graft_ann_topk(3)", "graft_tfidf_topk(3)").foreach { tvf =>
+      val df = spark.sql(s"SELECT * FROM $tvf")
+      df.collect()
+      val limits = collect(df.queryExecution.executedPlan) { case w: WindowGroupLimitExec => w }
+      assert(limits.nonEmpty, s"$tvf ranks the whole corpus: no WindowGroupLimit in its plan")
+    }
   }
 }
